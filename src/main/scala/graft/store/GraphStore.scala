@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.core._
@@ -633,7 +634,17 @@ final class GraphStore(
   /** Snapshot commit; `shardPartitions` writes each node table
     * range-partitioned and sorted by id — the analog of the reference's
     * id-range shards (S2, include/storage/shard.hpp:30-101), which keeps
-    * id-lookup scans to one file and makes restores min/max-prunable. */
+    * id-lookup scans to one file and makes restores min/max-prunable.
+    *
+    * Cost: one serial pass flushes every table and decides reuse; the
+    * parquet writes of all changed tables then run at the same time
+    * (at most [[GraphStore.MaxConcurrentWrites]]), each job carrying the
+    * caller's local properties and session. The v-dir manifest and the
+    * pointer flip follow only once every write has ended; a failed
+    * write publishes nothing. The rewritten tables are re-pointed at
+    * their new files with the schema just written, so the re-point reads
+    * no parquet footers. With one changed table the commit costs what a
+    * serial one does; the overlap pays from two changed tables on. */
   def commit(path: String, shardPartitions: Option[Int]): Unit = {
     // Snapshot-versioned layout (reference: consecutive snapshots write
     // new manifests + data files, tests/database_test.cpp:299,352): every
@@ -674,17 +685,6 @@ final class GraphStore(
       .find(cand => io.reserveVersionDir(s"$path/v$cand")).get
     val vPath = s"$path/v$v"
     val canonRoot = GraphStore.canonicalPath(path)
-    // Incremental commit: a table whose base still reads a prior
-    // snapshot's files UNMODIFIED (cleanData matches this root — flush
-    // above would have cleared it had anything mutated) is carried
-    // forward BY REFERENCE: its manifest entry points at the existing
-    // data dir and nothing is rewritten. At the 100 TB scale this is
-    // the difference between a commit costing O(changed tables) and one
-    // rewriting the whole corpus because one small table changed.
-    // (A reused table keeps its existing physical layout; a changed
-    // shardPartitions setting applies on its next actual rewrite.)
-    val dataRels = mutable.Map[String, String]() // table key -> rel path
-    val reusedKeys = mutable.Set[String]()
     // The per-table parquet DATA writes race concurrent gcSnapshots the
     // same way the manifest write below does: until the v-dir manifest
     // lands, an external sweep legally classifies this reserved dir as
@@ -745,49 +745,70 @@ final class GraphStore(
     // edge entry WITHOUT "data" definitively has no data (schema-only
     // table); restore must not guess a path for it.
     root.put("incremental", true)
+    // Format marker: every data entry's files have the schema its
+    // "schema"/"props" implies, unless the entry carries the files' own
+    // schema as "dataSchema" (a non-versioned SET can widen a column's
+    // type). Restore reads with that schema instead of inferring it.
+    root.put("impliedSchemas", true)
+    // Serial pass: flush, reuse decision and manifest entry per table.
+    // Incremental commit: a table whose base still reads a prior
+    // snapshot's files UNMODIFIED (cleanData matches this root — the
+    // flush would have cleared it had anything mutated) is carried
+    // forward BY REFERENCE: its manifest entry points at the existing
+    // data dir and nothing is rewritten. At the 100 TB scale this is
+    // the difference between a commit costing O(changed tables) and one
+    // rewriting the whole corpus because one small table changed.
+    // (A reused table keeps its existing physical layout; a changed
+    // shardPartitions setting applies on its next actual rewrite.)
+    // Every other table with data is queued for a rewrite into v<N>/.
+    // Manifest data dirs (reused AND rewritten), for the flip-time
+    // re-verify and the pin:
+    val dataRels = mutable.ArrayBuffer[String]()
+    // (table, data dir, frame to write) per table this commit rewrites:
+    val writes = mutable.ArrayBuffer[(TableState, String, DataFrame)]()
+    def dataEntry(n: com.fasterxml.jackson.databind.node.ObjectNode,
+        t: TableState, rel: String, implied: StructType,
+        layout: DataFrame => DataFrame): Unit =
+      t.base.foreach { b =>
+        val d = reusable(t).getOrElse {
+          writes += ((t, rel, layout(b))); rel
+        }
+        n.put("data", d)
+        dataRels += d
+        if (ColumnBridge.asNullable(b.schema) !=
+            ColumnBridge.asNullable(implied))
+          n.put("dataSchema", b.schema.json)
+      }
     val labelsNode = root.putArray("labels")
     nodeTables.foreach { case (label, t) =>
       t.flush(spark)
-      val rel = s"v$v/nodes/$label"
-      val reused = reusable(t)
-      t.base.foreach { b =>
-        if (reused.isEmpty) guardDataWrite {
-          val laidOut = shardPartitions.fold(b)(n =>
-            b.repartitionByRange(n, col("id")).sortWithinPartitions("id"))
-          laidOut.write.mode("overwrite").parquet(s"$vPath/nodes/$label")
-        }
-      }
       val ln = labelsNode.addObject()
       ln.put("label", label)
       ln.put("schema", catalog.schemaOf(label).json)
       ln.put("counter", catalog.nodeCounter(label))
-      if (t.base.isDefined) {
-        val d = reused.getOrElse(rel)
-        ln.put("data", d)
-        dataRels(s"n:$label") = d
-        if (reused.isDefined) reusedKeys += s"n:$label"
-      }
+      // false while attached ids have not seeded the counter (no CREATE
+      // since attachNodes): a restore then seeds it on its first CREATE
+      // instead of trusting the unseeded value
+      ln.put("counterInitialized", t.counterInitialized)
+      dataEntry(ln, t, s"v$v/nodes/$label", t.fullSchema(versioningEnabled),
+        b => shardPartitions.fold(b)(n =>
+          b.repartitionByRange(n, col("id")).sortWithinPartitions("id")))
     }
     val edgesNode = root.putArray("edges")
     edgeTables.foreach { case ((name, s, d), t) =>
       t.flush(spark)
-      val rel = s"v$v/edges/${name}__${s}__$d"
-      val reused = reusable(t)
-      t.base.foreach { b =>
-        if (reused.isEmpty) guardDataWrite {
-          b.write.mode("overwrite").parquet(s"$vPath/edges/${name}__${s}__$d")
-        }
-      }
       val en = edgesNode.addObject()
       en.put("name", name); en.put("src", s); en.put("dst", d)
       en.put("props", t.info.props.json)
-      if (t.base.isDefined) {
-        val dd = reused.getOrElse(rel)
-        en.put("data", dd)
-        dataRels(s"e:${name}__${s}__$d") = dd
-        if (reused.isDefined) reusedKeys += s"e:${name}__${s}__$d"
-      }
+      dataEntry(en, t, s"v$v/edges/${name}__${s}__$d", t.schema, identity)
     }
+    // The rewrites are independent jobs, each mostly fixed per-job cost
+    // at interactive sizes: run them at once, so their costs overlap
+    // instead of queueing. Every write keeps its own guard; nothing below
+    // runs until all of them have ended.
+    GraphStore.runConcurrently(spark, writes.toSeq.map { case (_, rel, df) =>
+      () => guardDataWrite(df.write.mode("overwrite").parquet(s"$path/$rel"))
+    })
     // (vPath already exists — the mkdir reservation above — so a fully-
     // unchanged store's manifest-only commit needs no directory here.)
     // The v-dir manifest write must be atomic too: gcSnapshots classifies
@@ -846,8 +867,7 @@ final class GraphStore(
         // (the in-memory tables were not re-pointed yet, so the store
         // stays usable and the commit is retryable — the retry finds
         // reusable() false and rewrites).
-        val vanished = dataRels.valuesIterator
-          .filterNot(d => io.exists(s"$path/$d")).toList
+        val vanished = dataRels.filterNot(d => io.exists(s"$path/$d")).toList
         if (vanished.nonEmpty)
           throw new IllegalStateException(
             "commit aborted before pointer flip: manifest data " +
@@ -928,19 +948,11 @@ final class GraphStore(
       // anything outside the class propagates untouched.
       val repoint: List[(TableState, String, DataFrame)] = try {
         GraphStore.guardSweepableRead(s"commit re-point (v$v)") {
-          val ns = nodeTables.toList.collect {
-            case (label, t)
-                if t.base.isDefined && !reusedKeys.contains(s"n:$label") =>
-              val rel = dataRels(s"n:$label")
-              (t: TableState, rel, spark.read.parquet(s"$path/$rel"))
+          // read back with the written frame's schema: the schema an
+          // inferred read returns, without its footer-reading job
+          writes.toList.map { case (t, rel, df) =>
+            (t, rel, GraphStore.readData(spark, s"$path/$rel", df.schema))
           }
-          val es = edgeTables.toList.collect {
-            case ((name, s, d), t) if t.base.isDefined &&
-                !reusedKeys.contains(s"e:${name}__${s}__$d") =>
-              val rel = dataRels(s"e:${name}__${s}__$d")
-              (t: TableState, rel, spark.read.parquet(s"$path/$rel"))
-          }
-          ns ++ es
         }
       } catch {
         case e: IllegalStateException
@@ -954,7 +966,7 @@ final class GraphStore(
       // this store now reads v's files plus any older versions its
       // manifest references
       GraphStore.pin(path, this,
-        Set(v) ++ dataRels.values.flatMap(GraphStore.versionOfRel))
+        Set(v) ++ dataRels.flatMap(GraphStore.versionOfRel))
     }
   }
 
@@ -1013,6 +1025,14 @@ final class GraphStore(
   private def table(label: String): NodeTable =
     nodeTables.getOrElse(label,
       throw new IllegalArgumentException(s"unknown schema: $label"))
+
+  /** The lazy base plan of a node label / an edge table, version
+    * columns included. */
+  private[store] def baseOf(label: String): Option[DataFrame] =
+    table(label).base
+  private[store] def edgeBaseOf(edgeType: String, srcLabel: String,
+      dstLabel: String): Option[DataFrame] =
+    edgeTables.get((edgeType, srcLabel, dstLabel)).flatMap(_.base)
 }
 
 object GraphStore {
@@ -1146,6 +1166,55 @@ object GraphStore {
   /** Version number of a manifest-relative data path ("v3/nodes/x" -> 3). */
   private[store] def versionOfRel(rel: String): Option[Int] =
     "^v(\\d+)/".r.findFirstMatchIn(rel).map(_.group(1).toInt)
+
+  /** Most parquet writes one [[GraphStore.commit]] runs at once. */
+  val MaxConcurrentWrites = 4
+
+  /** Run `writes` at the same time on a pool of at most
+    * [[MaxConcurrentWrites]] threads, each through Spark's
+    * `SQLExecution.withThreadLocalCaptured`, so every job carries the
+    * caller's local properties (job group, tags, `spark.sql.*`) and
+    * active session. Returns only when every write has ended — a
+    * failure never leaves another write running past the call — then
+    * rethrows the first failure in `writes` order, with any later ones
+    * attached as suppressed. */
+  private[store] def runConcurrently(spark: SparkSession,
+      writes: Seq[() => Unit]): Unit = if (writes.nonEmpty) {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(writes.size, MaxConcurrentWrites))
+    try {
+      val futures = writes.map(w =>
+        ColumnBridge.withThreadLocalCaptured(spark, pool)(w()))
+      val errors = futures.flatMap { f =>
+        try { f.join(); None }
+        catch { case e: java.util.concurrent.CompletionException =>
+          Some(e.getCause) }
+      }
+      errors.headOption.foreach { first =>
+        errors.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+  }
+
+  /** Read a committed data dir with its files' known schema: the frame
+    * equals an inferred read, without that read's footer job. A commit
+    * always leaves at least one data file (Spark writes one even for an
+    * empty frame), so a listing with none means a concurrent sweep
+    * emptied the dir — where an inferred read fails on its schema, this
+    * raises a file-not-found, so [[guardSweepableRead]] sees the same
+    * sweep surface either way. */
+  private[store] def readData(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    val df = spark.read.schema(schema).parquet(dir)
+    if (df.inputFiles.isEmpty)
+      throw new java.io.FileNotFoundException(s"$dir holds no data files")
+    df
+  }
 
   /** True when the cause chain shows the surface of reading a dir a
     * concurrent [[gcSnapshots]] swept mid-operation. A swept dir can
@@ -1350,6 +1419,18 @@ object GraphStore {
       else if (versioned && !incrementalFmt)
         Some(s"${dataPath.stripPrefix(s"$path/")}/$own")
       else None
+    // Manifests with the "impliedSchemas" marker name each data dir's
+    // schema — its entry's "dataSchema", else the one the entry implies —
+    // so the read infers nothing. Unmarked ones may hold drifted files
+    // without saying so, and keep the inferred read.
+    val impliedFmt = root.has("impliedSchemas")
+    def readRel(n: com.fasterxml.jackson.databind.JsonNode, rel: String,
+                implied: => StructType): DataFrame =
+      if (n.has("dataSchema"))
+        readData(spark, s"$path/$rel", DataType.fromJson(
+          n.get("dataSchema").asText()).asInstanceOf[StructType])
+      else if (impliedFmt) readData(spark, s"$path/$rel", implied)
+      else spark.read.parquet(s"$path/$rel")
     val readVersions = mutable.Set[Int]()
     root.get("labels").elements().asScala.foreach { ln =>
       val label = ln.get("label").asText()
@@ -1366,14 +1447,18 @@ object GraphStore {
           // sweepable-dir read: a cross-process sweep between the
           // manifest read above and this analysis is sanctioned
           t.base = Some(guardSweepableRead(s"restore ($label)")(
-            spark.read.parquet(s"$path/$rel")))
+            readRel(ln, rel, t.fullSchema(t.versioned))))
           t.markClean(canonRoot, rel)
           versionOfRel(rel).foreach(readVersions += _)
         case None if !versioned => // legacy root-level layout
           t.base = Some(spark.read.parquet(s"$dataPath/nodes/$label"))
         case None => // incremental format: schema-only table, no data
       }
-      t.counterInitialized = true
+      // a counter committed before ids seeded it stays lazy (the first
+      // CREATE seeds it from max(id)+1); manifests without the field
+      // trust the persisted counter, as before
+      t.counterInitialized = !ln.has("counterInitialized") ||
+        ln.get("counterInitialized").asBoolean()
     }
     root.get("edges").elements().asScala.foreach { en =>
       val (name, s, d) =
@@ -1387,7 +1472,7 @@ object GraphStore {
       dataRel(en, s"edges/${name}__${s}__$d") match {
         case Some(rel) =>
           t.base = Some(guardSweepableRead(s"restore ($name)")(
-            spark.read.parquet(s"$path/$rel")))
+            readRel(en, rel, t.schema)))
           t.markClean(canonRoot, rel)
           versionOfRel(rel).foreach(readVersions += _)
         case None if !versioned =>

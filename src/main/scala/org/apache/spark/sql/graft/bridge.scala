@@ -23,4 +23,21 @@ object ColumnBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** Run `body` on `exec` through Spark's own
+    * `SQLExecution.withThreadLocalCaptured`: the pooled thread gets the
+    * caller's local properties (job group, job tags, `spark.sql.*`) and
+    * active session, so its jobs look like the caller's. The Spark
+    * method takes the classic session, hence the hop. */
+  def withThreadLocalCaptured[T](spark: org.apache.spark.sql.SparkSession,
+      exec: java.util.concurrent.ExecutorService)(
+      body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      exec)(body)
+
+  /** `StructType.asNullable` (`private[spark]`): the nullability every
+    * file-source read applies to its data schema. */
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
 }

@@ -27,6 +27,25 @@ class SnapshotSpec extends SparkSpec {
     assert(s.createNode("User", Map("name" -> "d")) === 44L)
   }
 
+  test("CREATE after attach -> commit -> restore continues from max " +
+      "attached id") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-snap-attach").toString
+    val s = new GraphStore(spark)
+    s.attachNodes("User",
+      (0L until 10L).map(i => (i, s"u$i")).toDF("uid", "name"), "uid")
+    // the attached ids never seeded the counter: the snapshot must not
+    // persist its unseeded 0 as authoritative
+    s.commit(dir)
+    val r = GraphStore.restore(spark, dir)
+    assert(r.createNode("User", Map("name" -> "new")) === 10L)
+    // once seeded, the counter persists as usual
+    r.commit(dir)
+    val r2 = GraphStore.restore(spark, dir)
+    assert(r2.createNode("User", Map("name" -> "next")) === 11L)
+    s.close(); r.close(); r2.close()
+  }
+
   test("commit + restore round-trips nodes, edges, schemas, counters") {
     val dir = Files.createTempDirectory("graft-snap").toString
     val s = new GraphStore(spark)
