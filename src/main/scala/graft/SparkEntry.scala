@@ -1913,9 +1913,13 @@ object SparkEntry {
         .select(col("src"), col("dst"), col("hops")))
   )
 
-  /** GraphX-lifted batch analytics (SURVEY.md §2.10). */
+  /** Batch graph analytics (SURVEY.md §2.10), lifted into GraphX except
+    * g42. */
   private def analyticsQueries
       : Map[String, (SparkSession, String) => DataFrame] = Map(
+    // connected components on the engine's DataFrame contraction CC —
+    // the engine that also clusters duplicates (p49/p73) — over GraphX's
+    // vertex set
     "g42_components" -> ((s, dir) =>
       GraphAnalytics.connectedComponents(TpchGraph.store(s, dir),
         Seq(("same_nation", "supplier", "supplier")))),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * tables).
   *
   * Default: lazy `localCheckpoint` — executor-local blocks, measured
-  * 1.5-2× faster than eager here (Dedup.minhashLsh scaladoc) and than
+  * 1.5-2× faster than eager here (the Dedup.minhashLsh A/B) and than
   * any storage-backed alternative. The cost is fault tolerance: local
   * checkpoint blocks are NOT recomputable (lineage is truncated), so an
   * executor lost mid-query fails the whole query.

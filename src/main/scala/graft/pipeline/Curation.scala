@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.analytics.GraphAnalytics
+
 /** Corpus-curation operators a large-scale training-data pipeline needs
   * beyond dedup/similarity: benchmark decontamination, token-budget
   * sequence packing, stratified sampling, and duplicate-cluster
@@ -361,222 +363,21 @@ object Curation {
     * order-dependence of greedy pair dropping (a-b and b-c collapse to one
     * cluster even though a-c was never directly compared).
     *
-    * 100 TB shape: [[connectedComponents]] — DataFrame-native
-    * min-label propagation with graph contraction and pointer jumping
-    * (replaced GraphX in round 7: ~2× faster at sf1 and the edge set
-    * shrinks geometrically per round instead of being re-shuffled in
-    * full every Pregel superstep). The pairs frame is near-dup-sized
-    * (≪ corpus), the docs side contributes ids only.
+    * 100 TB shape: [[GraphAnalytics.connectedComponents]] —
+    * DataFrame-native min-label propagation with graph contraction and
+    * pointer jumping (replaced GraphX in round 7: ~2× faster at sf1 and
+    * the edge set shrinks geometrically per round instead of being
+    * re-shuffled in full every Pregel superstep). The pairs frame is
+    * near-dup-sized (≪ corpus), the docs side contributes ids only.
     */
   def dupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
                   aCol: String = "id_a", bCol: String = "id_b"): DataFrame =
-    connectedComponents(docs.select(col(idCol).cast("long").as("u")),
+    GraphAnalytics.connectedComponents(
+      docs.select(col(idCol).cast("long").as("u")),
       pairs.select(col(aCol).cast("long").as("u"),
         col(bCol).cast("long").as("v")))
       .withColumnRenamed("u", idCol)
       .withColumnRenamed("l", "cluster")
-
-  /** DataFrame-native connected components: min-label propagation with
-    * POINTER JUMPING (each round also replaces a vertex's label by its
-    * label's label), the DataFrame rendering of the MapReduce-CC family
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    * alternating-star contraction; pointer jumping gives the same
-    * O(log d) round bound). Labels decrease monotonically toward the
-    * component minimum, so the fixpoint is exactly GraphX
-    * `connectedComponents` output — but each round is three codegen'd
-    * Tungsten shuffles (join-by-neighbor, min-aggregate, join-by-label)
-    * instead of a Pregel superstep on serialized RDDs. Measured at sf1
-    * (50 k docs, 2.5 M near-dup pairs): GraphX ~10 s regardless of edge
-    * count (per-iteration fixed cost), this ~2 s. Rounds are
-    * [[graft.core.Materialize]]d: iterative plans must not stack
-    * lineage, and the one-knob reliable-checkpoint mode applies here
-    * exactly like VarLength's frontier loop.
-    *
-    * `vertices`: one `u` column; `edges`: `u`,`v` (undirected — both
-    * directions are derived). Edge endpoints MUST be vertex ids: an
-    * endpoint outside `vertices` neither receives a label nor bridges
-    * two components ([[dupClusters]] guarantees this — pairs reference
-    * document ids).
-    */
-  /** Edge count below which [[connectedComponents]] solves the graph
-    * (or its contracted remainder) on the driver: ≤ ~16 MB of raw ids —
-    * the same order as a broadcast-join build side, and far below what
-    * one distributed round costs to schedule. Bounded collect of ids,
-    * never payloads. */
-  val TailFinishEdges = 1000000
-
-  /** Min-root union-find over collected (u,v) edge rows → the remap
-    * pairs (member → component-min) for every non-root member. Shared
-    * by the small-graph fast path and the in-loop tail finish. */
-  private def unionFindRemap(rows: Array[org.apache.spark.sql.Row])
-      : Seq[(Long, Long)] = {
-    val root = scala.collection.mutable.LongMap.empty[Long]
-    // iterative find + full path compression: recursion would overflow
-    // the stack on a worst-case chain (parent depth can reach the edge
-    // count before compression kicks in)
-    def find(x: Long): Long = {
-      var r = x
-      while (root.getOrElse(r, r) != r) r = root.getOrElse(r, r)
-      var c = x
-      while (c != r) { val n = root.getOrElse(c, c); root(c) = r; c = n }
-      r
-    }
-    rows.foreach { r =>
-      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-      if (a != b) { if (a < b) root(b) = a else root(a) = b }
-    }
-    // snapshot the keys BEFORE the final find() sweep: path compression
-    // mutates the LongMap during iteration, which is only safe while
-    // compression writes exclusively to existing keys (no insert →
-    // no resize). That invariant is one future edit away from silent
-    // iterator corruption — an array copy of the keys removes the
-    // dependence entirely, for one bounded allocation.
-    val ks = root.keysIterator.toArray
-    ks.iterator.map(k => (k, find(k)))
-      .filter { case (k, v) => k != v }.toSeq
-  }
-
-  /** `tailFinish` overrides [[TailFinishEdges]] — tests pass 0 to force
-    * the distributed contraction loop on graphs that would otherwise
-    * take the driver fast path (the loop must stay covered; production
-    * callers leave the default). */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          tailFinish: Int = TailFinishEdges): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val e = edges.filter(col("u") =!= col("v"))
-      .transform(graft.core.Materialize(_))
-    // SMALL-GRAPH FAST PATH: when the whole pair set is driver-sized,
-    // distributed rounds are pure scheduling overhead — solve it with
-    // one union-find and map labels via a broadcast LEFT join. This is
-    // also the right 100 TB plan for the sparse-pair regime (billions
-    // of documents, few near-dups): the vertex side stays fully
-    // distributed and shuffle-free; only bounded ids ever reach the
-    // driver. The probe is a COUNT on the checkpointed edges (its
-    // materialization is shared with the loop init) — rows are only
-    // ever collected once the count proves them bounded; a limit-probe
-    // here measured ~1.5 s of row transfer at sf1 for nothing.
-    if (e.count() <= tailFinish) {
-      return vertices.join(
-          broadcast(unionFindRemap(e.collect()).toDF("u", "__lmin")),
-          Seq("u"), "left")
-        .select(col("u"), coalesce(col("__lmin"), col("u")).as("l"))
-    }
-    // `cur` is the CONTRACTED edge set: after each round, edges are
-    // rewritten through the current labels and self-edges dropped. A
-    // near-dup clique's m² edges all map to (min, min) after round one
-    // and vanish — the edge volume shrinks geometrically, so round
-    // cost is front-loaded instead of paid on the full graph every
-    // round (the property that makes the alternating-star family work
-    // on trillion-edge graphs).
-    var cur = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .transform(graft.core.Materialize(_))
-    var lab = vertices.select(col("u"), col("u").as("l"))
-      .transform(graft.core.Materialize(_))
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      require(rounds <= 64,
-        "connectedComponents failed to converge in 64 rounds — " +
-          "monotone min-label with pointer jumping converges in " +
-          "O(log diameter); this indicates a non-deterministic input")
-      // 1. every vertex takes the min label over itself + neighbors
-      //    (least() skips the null from vertices with no neighbors).
-      //    Materialized: both sides of the jump self-join read it.
-      //    Round 1 runs on identity labels (l == u), so the neighbor's
-      //    label IS the neighbor id — the label-lookup join is a no-op
-      //    and is skipped on the round that sees the FULL edge set
-      //    (every later round sees the geometrically smaller
-      //    contraction). Saves the single most expensive join of the
-      //    loop (r8, VERDICT r7 #3: bound the small-scale fixed cost).
-      val nbrMin =
-        if (rounds == 1) cur.groupBy("u").agg(min("v").as("ln"))
-        else cur.join(lab.withColumnRenamed("u", "v"), "v")
-          .groupBy("u").agg(min("l").as("ln"))
-      // NOT materialized: the jump below reads it three times, but all
-      // three reads are the same shuffle subplan and Catalyst's
-      // exchange reuse computes it once inside the jump's own job — a
-      // separate checkpoint was one extra full Spark job per round for
-      // nothing (VERDICT r7 #3, the small-scale fixed-cost audit).
-      val stepped = lab.join(nbrMin, Seq("u"), "left")
-        .select(col("u"), least(col("l"), col("ln")).as("l"))
-      // 2. pointer jumping, TWICE: follow two levels of label
-      //    indirection (a label is itself a vertex id, so it has a
-      //    label). Jump joins are vertex-sized — far cheaper than a
-      //    propagation round — so compressing two levels per round is
-      //    nearly free and halves the tail rounds. BOTH levels are kept
-      //    (`l2`, `l3`): their pointwise equality is the jump-fixpoint
-      //    probe, checked inside the SAME materialized frame instead of
-      //    re-joining against the previous round's labels.
-      val jump = stepped.as("x")
-        .join(stepped.select(col("u").as("l"), col("l").as("l2")), "l")
-        .select(col("u"), col("l2"))
-        .join(stepped.select(col("u").as("l2"), col("l").as("l3")), "l2")
-        .select(col("u"), col("l2"), col("l3"))
-        .transform(graft.core.Materialize(_))
-      val jumped = jump.select(col("u"), col("l3").as("l"))
-      // contract: endpoints → their labels; drop intra-component
-      // (self) edges; dedup parallel edges. Correctness: contracted
-      // components map 1:1 onto originals, and labels are vertex ids
-      // so the propagation join keys stay valid.
-      cur = cur.join(jumped, "u")
-        .select(col("l").as("cu"), col("v"))
-        .join(jumped.withColumnRenamed("u", "v")
-          .withColumnRenamed("l", "lv"), "v")
-        .select(col("cu").as("u"), col("lv").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .transform(graft.core.Materialize(_))
-      // Convergence probe — counts first, rows only when they are about
-      // to be used (a collect-based probe would ship up to
-      // tailFinish+1 contracted edges to the driver EVERY round while
-      // the graph is still big). `jumpAtFix` = lab² == lab³ pointwise
-      // (⟹ labⁿ == lab² for every n ≥ 2, so no future jump moves
-      // anything); both probes read this round's checkpointed frames —
-      // the first action is also what triggers their materialization.
-      // Three outcomes:
-      //
-      //  - jump fixed, no contracted edges: the state IS the
-      //    algorithm's fixpoint (empty `cur` ⟹ no future propagation
-      //    either) — done;
-      //  - jump fixed, tail ≤ tailFinish: chains are compressed, so
-      //    every label is a ROOT (lab(l)=l) and the contracted edges
-      //    are root→root — FINISH ON THE DRIVER with min-root
-      //    union-find over the tiny tail and broadcast the remap back
-      //    (the "finish locally" step of the MapReduce-CC family: the
-      //    geometric shrink makes the tail tiny after O(log) rounds,
-      //    and solving it centrally saves the long tail of near-empty
-      //    distributed rounds — bounded driver data by construction).
-      //    Correct: the true component min m has lab(m)=m (labels are
-      //    monotone ≤ id), so m is a root in the merged root-set and
-      //    min-root union-find assigns exactly it;
-      //  - otherwise keep iterating.
-      val jumpAtFix = jump.filter(col("l2") =!= col("l3")).isEmpty
-      val curCnt = if (jumpAtFix) cur.count() else Long.MaxValue
-      if (jumpAtFix && curCnt == 0) {
-        converged = true
-        lab = jumped
-      } else if (jumpAtFix && curCnt <= tailFinish) {
-        lab = jumped.join(
-            broadcast(unionFindRemap(cur.collect()).toDF("l", "__lmin")),
-            Seq("l"), "left")
-          .select(col("u"),
-            coalesce(col("__lmin"), col("l")).as("l"))
-          .transform(graft.core.Materialize(_))
-        converged = true
-      } else {
-        lab = jumped
-      }
-    }
-    // `lab` carries exactly the vertex set: it starts as `vertices` and
-    // every round maps it through left/inner joins whose right sides
-    // cover all labels (a label is always a vertex id present in
-    // `stepped`), so no row is ever dropped or added — returning it
-    // directly saves the final vertex-sized re-join the round-7 shape
-    // paid (VERDICT r7 #3).
-    lab
-  }
 
   /** Keep one canonical document per duplicate cluster (the minimum id —
     * GraphX's component label). */

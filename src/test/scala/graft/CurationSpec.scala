@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.analytics.GraphAnalytics
 import graft.pipeline.{Curation, Similarity}
 
 /** Behavior tests for the corpus-curation operators (decontamination,
@@ -114,15 +115,15 @@ class CurationSpec extends SparkSpec {
       val es = edges.toDF("u", "v")
       // default path: these graphs are under TailFinishEdges, so this
       // exercises the driver union-find fast path
-      val mine = Curation.connectedComponents(vs, es)
+      val mine = GraphAnalytics.connectedComponents(vs, es)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // tailFinish = 0 forces the distributed contraction loop (and its
       // in-loop convergence machinery) on the same graphs
-      val mineDist = Curation.connectedComponents(vs, es, tailFinish = 0)
+      val mineDist = GraphAnalytics.connectedComponents(vs, es, tailFinish = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // a mid-sized tail threshold makes the loop run SOME rounds and
       // then hand the contracted remainder to the driver finisher
-      val mineTail = Curation.connectedComponents(vs, es, tailFinish = 4)
+      val mineTail = GraphAnalytics.connectedComponents(vs, es, tailFinish = 4)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val g = Graph(
         spark.sparkContext.parallelize(
@@ -137,13 +138,28 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: an edge endpoint outside the vertices " +
+      "links its neighbors on every path and gets no row") {
+    import spark.implicits._
+    // 5 is no vertex, yet 10 and 11 take it as their label (least id
+    // reachable through the edges); 20 has no edge
+    val vs = Seq(10L, 11L, 20L).toDF("u")
+    val es = Seq((10L, 5L), (10L, 11L)).toDF("u", "v")
+    val expected = Seq(10L -> 5L, 11L -> 5L, 20L -> 20L)
+    for (tail <- Seq(GraphAnalytics.TailFinishEdges, 0, 4)) {
+      val res = GraphAnalytics.connectedComponents(vs, es, tailFinish = tail)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      assert(res === expected, s"tailFinish = $tail")
+    }
+  }
+
   test("connectedComponents driver fast path survives a worst-case " +
       "60k-edge chain (path compression must not recurse)") {
     import spark.implicits._
     val n = 60000L
     val vs = (0L until (n + 1)).toDF("u")
     val es = (0L until n).map(i => (i, i + 1)).toDF("u", "v")
-    val res = Curation.connectedComponents(vs, es)
+    val res = GraphAnalytics.connectedComponents(vs, es)
       .agg(org.apache.spark.sql.functions.countDistinct("l"),
         org.apache.spark.sql.functions.max("l"),
         org.apache.spark.sql.functions.count("*")).head

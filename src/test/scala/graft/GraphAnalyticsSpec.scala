@@ -83,4 +83,29 @@ class GraphAnalyticsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(res === Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L))
   }
+
+  test("store connectedComponents equals GraphX over two labels with " +
+      "overlapping ids, a dangling endpoint and isolated nodes") {
+    import spark.implicits._
+    // customer/orders-like: both labels use ids 0..3, so un-namespaced
+    // ids would merge C0 with O0 and C1 with O1; order 9 has no node row
+    // (attachEdges allows it) and must still be a vertex; C3 and O4 have
+    // no edge
+    val st = new GraphStore(spark)
+    st.attachNodes("C",
+      Seq(0L, 1L, 2L, 3L).map(i => (i, s"c$i")).toDF("id", "name"), "id")
+    st.attachNodes("O",
+      Seq(0L, 1L, 2L, 3L, 4L).map(i => (i, s"o$i")).toDF("id", "name"), "id")
+    st.attachEdges("placed", "C", "O",
+      Seq((1L, 0L), (2L, 3L), (0L, 9L)).toDF("src", "dst"))
+    val sets = Seq(("placed", "C", "O"))
+    val rows = GraphAnalytics.connectedComponents(st, sets)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    val local = (1L << 60) - 1
+    val oracle = GraphAnalytics.lift(st, sets).connectedComponents()
+      .vertices.collect()
+      .map { case (v, c) => (v & local) -> (c & local) }.toSeq.sorted
+    assert(oracle.size === 10) // 4 customers, 5 orders, 1 dangling order
+    assert(rows === oracle)
+  }
 }

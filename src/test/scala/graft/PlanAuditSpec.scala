@@ -121,15 +121,20 @@ class PlanAuditSpec extends SparkSpec {
 
   test("CC small-graph fast path: broadcast remap, zero vertex-side " +
       "shuffle") {
-    // The sparse-pair regime's 100 TB shape (Curation.scala fast path):
+    // The sparse-pair regime's 100 TB shape (GraphAnalytics CC fast path):
     // billions of documents, driver-sized pair set — labels must come
     // from a BroadcastHashJoin against the union-find remap, with the
     // vertex side never exchanged. A shuffle here means the corpus is
     // being moved to answer a broadcast-sized question.
-    import spark.implicits._
-    val vs = (0L until 1000L).toDF("u")
-    val es = (0L until 500L).map(i => (i, i + 1)).toDF("u", "v")
-    val df = graft.pipeline.Curation.connectedComponents(vs, es)
+    // A 10 000-edge chain: the remap holds 10 000 rows. The inputs are
+    // ranges, not local collections, so any LocalRelation in the plan
+    // is the remap inlined into it — which the optimizer then walks row
+    // by row (~0.2 s at the store CC's 150 k-row remap).
+    import org.apache.spark.sql.functions.col
+    val vs = spark.range(20000L).toDF("u")
+    val es = spark.range(10000L).select(col("id").as("u"),
+      (col("id") + 1).as("v"))
+    val df = graft.analytics.GraphAnalytics.connectedComponents(vs, es)
     val plan = physical(df)
     val finalPlan = plan.split("== Initial Plan ==").head
     assert(finalPlan.contains("BroadcastHashJoin"),
@@ -137,6 +142,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(!finalPlan.contains("SortMergeJoin") &&
       !finalPlan.contains("Exchange hashpartitioning"),
       s"shuffle crept into the CC fast path:\n$plan")
+    val inlined = df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }
+    assert(inlined.isEmpty && !plan.contains("LocalTableScan"),
+      s"CC remap inlined into the plan as local rows:\n$plan")
   }
 
   test("as-of join is ONE shuffle+sort, no nested loop") {
